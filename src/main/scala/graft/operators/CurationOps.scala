@@ -919,18 +919,9 @@ object CurationOps {
     * otherwise recompute the featurization k+1 times. A caller-managed
     * cache is left untouched. */
   def trainLogistic(feats: DataFrame, xCols: Seq[String], yCol: String,
-      iters: Int, lr: Double): Array[Long] = {
+      iters: Int, lr: Double): Array[Long] = Pins.scope {
     import org.apache.spark.sql.functions._
-    val tookCache =
-      feats.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (tookCache) feats.persist()
-    try trainLogisticCached(feats, xCols, yCol, iters, lr)
-    finally if (tookCache) { feats.unpersist(); () }
-  }
-
-  private def trainLogisticCached(feats: DataFrame, xCols: Seq[String],
-      yCol: String, iters: Int, lr: Double): Array[Long] = {
-    import org.apache.spark.sql.functions._
+    Pins.cache(feats)
     val n = feats.count()
     require(n > 0, "trainLogistic: empty training frame")
     var w = Array.fill(xCols.size + 1)(0L)
@@ -987,20 +978,17 @@ object CurationOps {
     * trajectory, not just the final counts). */
   def q283LrQuality(s: SparkSession, dir: String): DataFrame = {
     val feats = lrDocFeatures(load(s, dir, "documents"))
-    feats.cache()
-    try {
-      val w = trainLogistic(feats, Seq("x1", "x2", "x3"), "y",
-        iters = 8, lr = 1.0)
-      scoreLogistic(feats, Seq("x1", "x2", "x3"), w)
-        .groupBy($"source").agg(
-          count(lit(1)).cast("long").as("n_docs"),
-          sum(when($"p" > 0.5, 1L).otherwise(0L)).as("n_pos"),
-          sum(when(($"p" > 0.5) === ($"y" === 1), 1L).otherwise(0L))
-            .as("n_correct"))
-        .select($"source", $"n_docs", $"n_pos", $"n_correct",
-          lit(w(0)).as("w0"), lit(w(1)).as("w1"),
-          lit(w(2)).as("w2"), lit(w(3)).as("w3"))
-    } finally { feats.unpersist(); () }
+    val w = trainLogistic(feats, Seq("x1", "x2", "x3"), "y",
+      iters = 8, lr = 1.0)
+    scoreLogistic(feats, Seq("x1", "x2", "x3"), w)
+      .groupBy($"source").agg(
+        count(lit(1)).cast("long").as("n_docs"),
+        sum(when($"p" > 0.5, 1L).otherwise(0L)).as("n_pos"),
+        sum(when(($"p" > 0.5) === ($"y" === 1), 1L).otherwise(0L))
+          .as("n_correct"))
+      .select($"source", $"n_docs", $"n_pos", $"n_correct",
+        lit(w(0)).as("w0"), lit(w(1)).as("w1"),
+        lit(w(2)).as("w2"), lit(w(3)).as("w3"))
   }
 
   /** EXACT precision/recall table for a scored frame: bucket the
@@ -1035,12 +1023,9 @@ object CurationOps {
     * end-to-end. */
   def q284PrCurve(s: SparkSession, dir: String): DataFrame = {
     val feats = lrDocFeatures(load(s, dir, "documents"))
-    feats.cache()
-    try {
-      val w = trainLogistic(feats, Seq("x1", "x2", "x3"), "y",
-        iters = 8, lr = 1.0)
-      prCurve(scoreLogistic(feats, Seq("x1", "x2", "x3"), w))
-    } finally { feats.unpersist(); () }
+    val w = trainLogistic(feats, Seq("x1", "x2", "x3"), "y",
+      iters = 8, lr = 1.0)
+    prCurve(scoreLogistic(feats, Seq("x1", "x2", "x3"), w))
   }
 
   val oracles: Map[String, String] = Map(

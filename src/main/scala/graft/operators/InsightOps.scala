@@ -202,11 +202,14 @@ object InsightOps {
     * `pagerank(ed, 50)` is 50 shallow plans rather than one
     * exponentially nested one — the per-round lineage cut is what makes
     * the iteration runnable at real graph scale. */
-  def pagerank(ed: DataFrame, iters: Int, widen: Boolean = false): DataFrame = {
+  def pagerank(ed: DataFrame, iters: Int, widen: Boolean = false): DataFrame = Pins.scope {
     val (contrib, ranks0) = pagerankInit(ed)
     var ranks = ranks0
-    for (_ <- 1 to iters)
-      ranks = pagerankStep(contrib, ranks, widen).localCheckpoint()
+    for (_ <- 1 to iters) {
+      val next = Pins.pin(pagerankStep(contrib, ranks, widen), eager = true)
+      Pins.release(ranks)
+      ranks = next
+    }
     ranks.select($"node", $"r".as("rank_scaled"))
   }
 
@@ -217,17 +220,18 @@ object InsightOps {
     * (the q51 refusal discipline; integer floor division can in
     * principle 2-cycle, and the cap turns that into a loud failure). */
   def pagerankConverged(
-      ed: DataFrame, maxIters: Int = 50, widen: Boolean = false): DataFrame = {
+      ed: DataFrame, maxIters: Int = 50, widen: Boolean = false): DataFrame = Pins.scope {
     val (contrib, ranks0) = pagerankInit(ed)
-    var ranks = ranks0.localCheckpoint()
+    var ranks = Pins.pin(ranks0, eager = true)
     var iter = 0
     var done = false
     while (!done && iter < maxIters) {
-      val next = pagerankStep(contrib, ranks, widen).localCheckpoint()
+      val next = Pins.pin(pagerankStep(contrib, ranks, widen), eager = true)
       // null-safe inequality: a node whose rank row appears/disappears
       // (in-edge-less nodes drop out after round 1) counts as a change
       done = next.as("a").join(ranks.as("b"), Seq("node"), "full_outer")
         .filter(!(col("a.r") <=> col("b.r"))).isEmpty
+      Pins.release(ranks)
       ranks = next
       iter += 1
     }
@@ -390,7 +394,7 @@ object InsightOps {
         $"user_id")
       .repartition(width, $"b")
       .dropDuplicates("b", "user_id")
-      .localCheckpoint(false) // lazy: first consumer materializes
+      .transform(Pins.pin(_, eager = false)) // lazy: first consumer materializes
     val occ = bu.groupBy($"b").agg(count(lit(1)).as("occ"))
     // adaptive cap: the occupancy value at integer-exact position
     // ceil(9n/10) of (occ, b) ascending — bucket-count-sized window
@@ -425,7 +429,7 @@ object InsightOps {
     // second bu-scan+join stage per side this round)
     val ku = bu.join(
         broadcast(withCap.filter($"occ" <= $"cap").select($"b")), "b")
-      .localCheckpoint(false)
+      .transform(Pins.pin(_, eager = false))
       .repartition(width, $"b")
     // the edge list is the shared artifact every co-engagement query
     // fans out from (degree table + wedge sides in q197, k label-prop
@@ -434,16 +438,16 @@ object InsightOps {
     // consumer position. Lazy: the first consumer action materializes
     // it (an eager pin here would be one more fixed-cost job on every
     // graph query). Pinned set is the THRESHOLDED edge list
-    // (w ≥ minShared), bounded far below the corpus; iterative
-    // consumers (kCore, the component solve) release it as soon as
-    // their own artifacts supersede it.
+    // (w ≥ minShared), bounded far below the corpus; the queries whose
+    // results do not read it (q207, q211) free it when their scope
+    // exits.
     val edges = ku.as("l").join(ku.as("r"),
         col("l.b") === col("r.b") && col("l.user_id") < col("r.user_id"))
       .groupBy(col("l.user_id").as("u"), col("r.user_id").as("v"))
       .agg(count(lit(1)).as("w"))
       .filter($"w" >= minShared)
       .select($"u", $"v")
-      .localCheckpoint(false)
+      .transform(Pins.pin(_, eager = false))
     (edges, hot)
   }
 
@@ -460,9 +464,10 @@ object InsightOps {
         when(low, $"u").otherwise($"v").as("src"),
         when(low, $"v").otherwise($"u").as("dst"),
         when(low, $"dv").otherwise($"du").as("ddst"))
-      .localCheckpoint(false) // lazy: cut before the three-way reuse;
-    // bounded (one row per thresholded edge + two degree columns) —
-    // blocks live until ContextCleaner, the documented lazy-pin tradeoff
+      // lazy: cut before the three-way reuse; bounded (one row per
+      // thresholded edge + two degree columns) — blocks live until
+      // ContextCleaner, the documented lazy-pin tradeoff
+      .transform(Pins.pin(_, eager = false))
     val tri = oriented.as("x")
       .join(oriented.as("y"),
         col("x.src") === col("y.src") &&
@@ -525,8 +530,9 @@ object InsightOps {
         struct($"u", $"v"),
         struct($"v".as("u"), $"u".as("v")))).as("e"))
       .select($"e.u".as("u"), $"e.v".as("v"))
-      .localCheckpoint(false) // lazy: materialized once, read k times;
-    // bounded: 2·|thresholded edge list|
+      // lazy: materialized once, read k times; bounded: 2·|thresholded
+      // edge list|
+      .transform(Pins.pin(_, eager = false))
     var labels = sym.select($"u".as("node")).distinct()
       .withColumn("label", $"node")
     (1 to k).foreach { _ =>
@@ -558,14 +564,12 @@ object InsightOps {
     * O(log n) rounds regardless of component DIAMETER, which plain
     * min-propagation cannot promise on chain-shaped co-engagement
     * graphs. Edge derivation and hot-bucket accounting are q197's. */
-  def q207Components(s: SparkSession, dir: String): DataFrame = {
+  def q207Components(s: SparkSession, dir: String): DataFrame = Pins.scope {
+    // the solve's result is driver-local rows or the contraction's own
+    // checkpoint, so the scope frees the edge pins on return
     val (edges, hot) = coEdges(load(s, dir, "events"), 3L)
     val members = graft.operators.TextOps.clusterMembersFromPairs(
       edges.select($"u".as("id_a"), $"v".as("id_b")))
-    // the solve pinned (and already released) its own copy; its result
-    // is driver-local rows or the contraction's own checkpoint — the
-    // edge pin has no consumer left
-    graft.operators.TextOps.releaseLocalCheckpoint(edges)
     members
       .select($"doc_id".as("user_id"), $"cluster_id".as("component"))
       .crossJoin(broadcast(hot))
@@ -601,18 +605,21 @@ object InsightOps {
   val KCoreMaxLocalEdges: Long = 1000000L
 
   def kCore(edges0: DataFrame, k: Long, maxRounds: Int,
-      maxLocalEdges: Long = KCoreMaxLocalEdges): DataFrame = {
-    // never re-checkpoint a frame that IS already a checkpoint leaf
-    // (coEdges hands one over): the copy costs a materialization job
-    // and a duplicate block set per query
-    val pinned = if (isCheckpointLeaf(edges0)) edges0
-      else edges0.localCheckpoint(false)
-    var n = pinned.count()
-    if (n <= maxLocalEdges) {
-      val es = pinned.collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (!(pinned eq edges0)) TextOps.releaseLocalCheckpoint(pinned)
-      return kCoreLocal(edges0.sparkSession, es, k, maxRounds)
-    }
+      maxLocalEdges: Long = KCoreMaxLocalEdges): DataFrame = Pins.scope {
+    // a frame that already is a pin (coEdges hands one over) is not
+    // copied: the copy would cost a materialization job and a duplicate
+    // block set per query
+    val pinned = Pins.pin(edges0, eager = false)
+    val n0 = pinned.count()
+    if (n0 <= maxLocalEdges)
+      kCoreLocal(edges0.sparkSession,
+        pinned.collect().map(r => (r.getLong(0), r.getLong(1))), k, maxRounds)
+    else kCoreDistributed(pinned, n0, k, maxRounds)
+  }
+
+  private def kCoreDistributed(
+      pinned: DataFrame, n0: Long, k: Long, maxRounds: Int): DataFrame = {
+    var n = n0
     var cur = pinned
     var converged = false
     var round = 0
@@ -626,11 +633,11 @@ object InsightOps {
         .join(keep.select($"node".as("u")), "u", "left_semi")
         .join(keep.select($"node".as("v")), "v", "left_semi")
         .select($"u", $"v")
-        .localCheckpoint(false)
+        .transform(Pins.pin(_, eager = false))
       val m = next.count()
       // the superseded round's blocks are dead once next is
-      // materialized — release them (round 0 is the caller's frame)
-      if (!(cur eq pinned)) TextOps.releaseLocalCheckpoint(cur)
+      // materialized (a caller's pin is not this scope's to free)
+      Pins.release(cur)
       converged = m == n
       n = m
       cur = next
@@ -677,13 +684,6 @@ object InsightOps {
     coreDeg.toSeq.sortBy(_._1).toDF("node", "core_deg")
   }
 
-  /** True iff the frame's plan is a bare `localCheckpoint` leaf — its
-    * blocks already hold the materialized rows, so another checkpoint
-    * would only copy them. */
-  private def isCheckpointLeaf(df: DataFrame): Boolean =
-    df.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-
   /** q211 — the 3-core of the co-engagement graph with the shared
     * hot-bucket accounting; every surviving user's in-core degree is
     * the gated value. Oracle: the peeling loop unrolled to
@@ -692,13 +692,12 @@ object InsightOps {
     * peeling depth — the Spark side throws if it ever exceeds it). */
   val KCoreRounds = 16
 
-  def q211KCore(s: SparkSession, dir: String): DataFrame = {
-    val (edges, hot) = coEdges(load(s, dir, "events"), 3L)
-    val core = kCore(edges, k = 3L, maxRounds = KCoreRounds)
+  def q211KCore(s: SparkSession, dir: String): DataFrame = Pins.scope {
     // kCore's result never re-reads the edge pin (the local path
     // returns driver-local rows; the distributed path ends on its own
-    // round checkpoint) — free the blocks now
-    graft.operators.TextOps.releaseLocalCheckpoint(edges)
+    // round checkpoint), so the scope frees it on return
+    val (edges, hot) = coEdges(load(s, dir, "events"), 3L)
+    val core = kCore(edges, k = 3L, maxRounds = KCoreRounds)
     core
       .select($"node".as("user_id"), $"core_deg")
       .crossJoin(broadcast(hot))
@@ -990,10 +989,9 @@ object InsightOps {
   /** Core: modularity of a partition `lab` = (node, label) over an
     * undirected edge list (u < v). */
   def modularityOf(edges: DataFrame, lab: DataFrame): DataFrame = {
-    // skip the pin when the caller already hands a checkpoint leaf
-    // (q242 does) — re-checkpointing copies the block set for nothing
-    val e = if (isCheckpointLeaf(edges)) edges
-      else edges.localCheckpoint(false)
+    // a caller's pin (q242 hands one over) is used as it is —
+    // re-checkpointing copies the block set for nothing
+    val e = Pins.pin(edges, eager = false)
     val m = e.count()
     val sym = e.unionAll(e.select($"v".as("u"), $"u".as("v")))
     val deg = sym.groupBy($"u".as("node")).agg(count(lit(1)).as("d"))

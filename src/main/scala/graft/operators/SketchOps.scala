@@ -450,7 +450,8 @@ object SketchOps {
       right: DataFrame, rightKey: Column,
       mBits: Long = 1L << 20, k: Int = 4): DataFrame = {
     val bloom = buildBloom(right, rightKey, mBits, k)
-      .localCheckpoint() // ≤ mBits/64 rows, reused by k broadcast builds
+      // ≤ mBits/64 rows, reused by k broadcast builds
+      .transform(Pins.pin(_, eager = true))
     val candidates = bloomProbe(left, leftKey, bloom, mBits, k)
     candidates.join(right.select(rightKey.as("__bsj_rk")).distinct(),
       leftKey === col("__bsj_rk"), "left_semi")
@@ -469,7 +470,8 @@ object SketchOps {
       right: DataFrame, rightKey: Column,
       mBits: Long = 1L << 20, k: Int = 4): DataFrame = {
     val bloom = buildBloom(right, rightKey, mBits, k)
-      .localCheckpoint() // ≤ mBits/64 rows, reused by k broadcast builds
+      // ≤ mBits/64 rows, reused by k broadcast builds
+      .transform(Pins.pin(_, eager = true))
     val flagged = bloomProbeFlag(left, leftKey, bloom, "__baj_hit", mBits, k)
     val misses = flagged.filter(!$"__baj_hit").drop("__baj_hit")
     val rescued = flagged.filter($"__baj_hit").drop("__baj_hit")
@@ -538,7 +540,7 @@ object SketchOps {
     // and the final join — without it the release-C probe would run
     // twice (a second full pass over the new release at 100 TB);
     // materialized by the first action, reused by the second
-    val candidates = bloomProbe(relC, $"text", history).localCheckpoint(false)
+    val candidates = Pins.pin(bloomProbe(relC, $"text", history), eager = false)
     // exact verify, candidate-bloom-prefiltered on the history side
     val candBloom = buildBloom(candidates, $"text")
     val histTexts = bloomProbe(
@@ -580,8 +582,9 @@ object SketchOps {
     require(afterFold == Seq("folded-0"),
       s"q178 gate is vacuous unless the fold ran: live tags $afterFold")
     val history = HistogramStream.readBloomStore(s, store)
-      .localCheckpoint() // ≤ mBits/64 rows, reused by k broadcast builds
-    val candidates = bloomProbe(relC, $"text", history).localCheckpoint(false)
+      // ≤ mBits/64 rows, reused by k broadcast builds
+      .transform(Pins.pin(_, eager = true))
+    val candidates = Pins.pin(bloomProbe(relC, $"text", history), eager = false)
     val candBloom = buildBloom(candidates, $"text")
     val histTexts = bloomProbe(
       relA.select($"text").union(relB.select($"text")), $"text", candBloom)
@@ -732,7 +735,8 @@ object SketchOps {
     writeCms(buildCms(sh.filter($"doc_id" % 2 === 0L), $"g"), s"$tmp/cms_a")
     writeCms(buildCms(sh.filter($"doc_id" % 2 === 1L), $"g"), s"$tmp/cms_b")
     val cms = mergeCms(readCms(s, s"$tmp/cms_a"), readCms(s, s"$tmp/cms_b"))
-      .localCheckpoint() // reused by d broadcast builds; ≤ d×w rows
+      // reused by d broadcast builds; ≤ d×w rows
+      .transform(Pins.pin(_, eager = true))
     val candidates = cmsHeavyProbe(sh, $"g", cms, threshold)
     candidates.groupBy($"g").agg(count(lit(1)).as("n_exact"))
       .filter($"n_exact" >= threshold)
@@ -757,13 +761,14 @@ object SketchOps {
     val tmp = graft.TempDirs.create("q167").toString
     writeCms(buildCms(shB, $"g"), s"$tmp/cms_b")
     val cmsB = readCms(s, s"$tmp/cms_b")
-      .localCheckpoint() // reused by d broadcast builds; ≤ d×w rows
+      // reused by d broadcast builds; ≤ d×w rows
+      .transform(Pins.pin(_, eager = true))
     // exact heavy set of the new release; checkpointed — it feeds both
     // the old-release prefilter and the final join
     val heavyB = cmsHeavyProbe(shB, $"g", cmsB, threshold)
       .groupBy($"g").agg(count(lit(1)).as("n_b"))
       .filter($"n_b" >= threshold)
-      .localCheckpoint(false)
+      .transform(Pins.pin(_, eager = false))
     val aCounts = shA
       .join(broadcast(heavyB.select($"g")), Seq("g"), "left_semi")
       .groupBy($"g").agg(count(lit(1)).as("n_a"))
@@ -807,7 +812,8 @@ object SketchOps {
     HistogramStream.appendCmsShard(s, store, "batch_2",
       buildCms(sh.filter($"doc_id" % 3 === 2L), $"g"))
     val cms = HistogramStream.readCmsStore(s, store)
-      .localCheckpoint() // reused by d broadcast builds; ≤ d×w rows
+      // reused by d broadcast builds; ≤ d×w rows
+      .transform(Pins.pin(_, eager = true))
     cmsHeavyProbe(sh, $"g", cms, threshold)
       .groupBy($"g").agg(count(lit(1)).as("n_exact"))
       .filter($"n_exact" >= threshold)
@@ -1365,7 +1371,8 @@ object SketchOps {
   def q148HllOverlap(s: SparkSession, dir: String): DataFrame = {
     val ev = load(s, dir, "events").select($"event_type", $"user_id")
     val regs = hllRegisters(ev, $"user_id", $"event_type")
-      .localCheckpoint() // reused 3× below (pair build + both est joins); ≤ types×64 rows
+      // reused 3× below (pair build + both est joins); ≤ types×64 rows
+      .transform(Pins.pin(_, eager = true))
     val est = hllEstimate(regs)
     val pairRegs = regs.as("a").join(regs.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.k") < col("b.k"))

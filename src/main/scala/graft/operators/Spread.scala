@@ -5,22 +5,14 @@ import org.apache.spark.sql.SparkSession
 /** Scale-adaptive spread arithmetic shared by the fan-out pins. */
 private[graft] object Spread {
 
-  /** Partition width for spreading a frame whose ROW COUNT is known
-    * (materialized checkpoints, metadata-counted parquet scans): grows
-    * linearly with the row count up to the session's parallelism, so a
-    * tiny frame keeps few partitions — `defaultParallelism` fixed-cost
-    * tasks per stage (and per iterative round) were the r16
-    * q211/q207/q242 32-core regression — while a big frame still gets
-    * the full width (guide §2.2/§2.5: right-size partitions to the
-    * data, never to the session alone). */
-  def sizedWidth(spark: SparkSession, rows: Long, rowsPerTask: Long): Int =
-    math.min(spark.sparkContext.defaultParallelism.toLong,
-      math.max(1L, (rows + rowsPerTask - 1L) / rowsPerTask)).toInt
-
-  /** Same, from the optimizer's size estimate (file size for parquet
-    * scans, rows×rowWidth for local relations) — costs NO job at all,
-    * where even a metadata-only count() pays one fixed-cost action on
-    * every driver run. */
+  /** Partition width from the optimizer's size estimate (file size for
+    * parquet scans, rows×rowWidth for local relations): grows linearly
+    * with the bytes up to the session's parallelism, so a tiny frame
+    * keeps few partitions — `defaultParallelism` fixed-cost tasks per
+    * stage were the r16 q211/q207/q242 32-core regression — while a big
+    * frame still gets the full width. Costs NO job at all, where even a
+    * metadata-only count() pays one fixed-cost action on every driver
+    * run. */
   def sizedWidthFromBytes(
       spark: SparkSession, bytes: BigInt, bytesPerTask: Long): Int =
     ((bytes + bytesPerTask - 1) / bytesPerTask)

@@ -541,19 +541,20 @@ object TextOps {
       // and re-run the cap gate EXACTLY via the nCapped aggregate — an
       // extra pass, but only on the rare >maxLocalEdges path, and the
       // gate is the clusterer's correctness guarantee.
-      val (pairsRaw, nCappedDf) = lshPipeline(docs, threshold, None)
-      val pairs = pairsRaw.cache()
-      val cappedExact = nCappedDf.head().getLong(0)
-      if (cappedExact > 0) {
-        val msg = s"dedupClusters: the LSH candidate cap ($MaxCandidatesPerDoc/doc) " +
-          s"dropped $cappedExact candidate pair(s) — clusters through hub documents " +
-          "may be split. Exact-dedup the corpus first or raise the cap."
-        if (failOnCappedEdges) { pairs.unpersist(); throw new IllegalStateException(msg) }
-        System.err.println(s"WARN $msg")
+      // out reads the round-0 checkpoint, not the cached pairs
+      Pins.scope {
+        val (pairsRaw, nCappedDf) = lshPipeline(docs, threshold, None)
+        val pairs = Pins.cache(pairsRaw)
+        val cappedExact = nCappedDf.head().getLong(0)
+        if (cappedExact > 0) {
+          val msg = s"dedupClusters: the LSH candidate cap ($MaxCandidatesPerDoc/doc) " +
+            s"dropped $cappedExact candidate pair(s) — clusters through hub documents " +
+            "may be split. Exact-dedup the corpus first or raise the cap."
+          if (failOnCappedEdges) throw new IllegalStateException(msg)
+          System.err.println(s"WARN $msg")
+        }
+        distributedClusters(pairs)
       }
-      val out = distributedClusters(pairs)
-      pairs.unpersist() // out reads the round-0 localCheckpoint, not pairs
-      out
     }
   }
 
@@ -566,7 +567,7 @@ object TextOps {
     * or below `maxLocalEdges`, large-star/small-star contraction
     * above. Labels are the component min id. */
   def clusterMembersFromPairs(
-      pairs: DataFrame, maxLocalEdges: Long = 1000000L): DataFrame = {
+      pairs: DataFrame, maxLocalEdges: Long = 1000000L): DataFrame = Pins.scope {
     // pin then count: a limit(n+1).collect() here would go through
     // executeTake's ESCALATING partition scans (1, 4, 16… partitions —
     // one driver-scheduled job each when the edge count never reaches
@@ -577,34 +578,17 @@ object TextOps {
     // ([[guardCandidates]]) deterministically before callers touch
     // their stores. Driver memory stays bounded: the collect only runs
     // when the counted edge set fits `maxLocalEdges`.
-    val pinned = pairs.localCheckpoint(false)
+    // The result reads driver-local rows (local path) or
+    // distributedClusters' own eager checkpoint, so the scope frees
+    // pinned's blocks on return (a long-lived streaming session calls
+    // this per micro-batch).
+    val pinned = Pins.pin(pairs, eager = false)
     val n = pinned.count()
-    val out =
-      if (n <= maxLocalEdges)
-        localClusters(pinned.sparkSession,
-          pinned.collect().map(r => (r.getLong(0), r.getLong(1))))
-      else distributedClusters(pinned) // round-0 checkpoint reads pinned blocks
-    // `out` reads driver-local rows (local path) or distributedClusters'
-    // own eager checkpoint — pinned's blocks are dead weight from here,
-    // and without an explicit release they linger in executor storage
-    // until driver GC happens to collect the RDD (unbounded pressure in
-    // a long-lived streaming session calling this per micro-batch)
-    releaseLocalCheckpoint(pinned)
-    out
+    if (n <= maxLocalEdges)
+      localClusters(pinned.sparkSession,
+        pinned.collect().map(r => (r.getLong(0), r.getLong(1))))
+    else distributedClusters(pinned) // round-0 checkpoint reads pinned blocks
   }
-
-  /** Frees the executor block storage pinned by a Dataset-level
-    * `localCheckpoint`. `Dataset.unpersist()` goes through the cache
-    * manager and never finds checkpoint blocks, so the checkpointed RDD
-    * is pulled out of the plan's `LogicalRDD` leaf and unpersisted
-    * directly. Only safe once nothing reads the blocks anymore — the
-    * checkpoint TRUNCATED lineage, so a later read cannot recompute. */
-  private[graft] def releaseLocalCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
 
   /** Driver union-find with path compression (the sub-`maxLocalEdges`
     * strategy of [[dedupClusters]]). */
@@ -637,14 +621,14 @@ object TextOps {
     * are `localCheckpoint`ed per round so the iterative plan never grows.
     * The loop verifies the fixpoint was actually reached and THROWS if
     * the defensive round cap trips — never a silent wrong answer. */
-  private[operators] def distributedClusters(pairsIn: DataFrame): DataFrame = {
+  private[operators] def distributedClusters(pairsIn: DataFrame): DataFrame = Pins.scope {
     // canonical big→small orientation, deduped
     var edges = pairsIn
       .select(
         greatest($"id_a", $"id_b").as("u"),
         least($"id_a", $"id_b").as("v"))
       .filter($"u" =!= $"v").distinct()
-      .localCheckpoint()
+      .transform(Pins.pin(_, eager = true))
 
     // large-star: from each node u's bidirectional neighborhood, link
     // every LARGER neighbor to m = min(N(u) ∪ {u}); output stays u > v
@@ -685,8 +669,8 @@ object TextOps {
       // the eager checkpoint materializes the new round NOW, so the
       // previous round's blocks are unreachable — release them instead
       // of letting up to 50 rounds of edge sets pile up in storage
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      releaseLocalCheckpoint(edges)
+      val next = Pins.pin(smallStar(largeStar(edges)), eager = true)
+      Pins.release(edges)
       edges = next
       prev = cur
       cur = state(edges)
@@ -922,11 +906,17 @@ object TextOps {
     * that feeds the join) and fires — naming the offending shingle and
     * its df — the moment a hot posting would otherwise enter the pair
     * join. Lossy mode drops hot postings instead, with the drops
-    * surfaced in the stats frame. */
+    * surfaced in the stats frame.
+    *
+    * The call itself is not lazy: it runs two eager actions, the
+    * one-row drop-stats collect and the eager pin of the df-cut
+    * postings. So the strict-mode refusal and the whole explosion and
+    * df-cut cost are paid at the call, even by a caller that never
+    * reads the returned frames. */
   def containmentPairs(
       docs: DataFrame, minScaled: Long = 8000L,
       maxDf: Long = MaxContainmentDf,
-      allowLossy: Boolean = false): (DataFrame, DataFrame) = {
+      allowLossy: Boolean = false): (DataFrame, DataFrame) = Pins.scope {
     // pinned (lazy localCheckpoint), not repartition-for-ReuseExchange:
     // the consumers below (df table, both pair-join sides) prune
     // different columns, so their exchanges canonicalize apart and the
@@ -939,14 +929,14 @@ object TextOps {
     // q64) — spread the store scale-adaptively so the block set, and
     // everything reading it, is wide. Unlike r16 the RAW explosion pin
     // is TRANSIENT: the pair join consumes the df-CUT survivors, which
-    // get their own pin below, and the raw blocks are released as soon
-    // as that pin is materialized — at corpus scale the long-lived
-    // block set is the cut postings, not the O(corpus × shingles)
-    // explosion (verdict-r16 item 4).
+    // get their own pin below, and the scope frees the raw blocks on
+    // return — at corpus scale the long-lived block set is the cut
+    // postings, not the O(corpus × shingles) explosion (verdict-r16
+    // item 4).
     val g = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select($"doc_id", explode(shingles($"text")).as("g"))
-      .localCheckpoint(false)
+      .transform(Pins.pin(_, eager = false))
     val dfreq = g.groupBy($"g").agg(count(lit(1)).as("df"))
     // per-doc shingle counts from the docs scan directly (size() over
     // the same array the explosion emits — row-for-row identical to
@@ -983,11 +973,10 @@ object TextOps {
         org.apache.spark.sql.types.StructField("n_dropped_postings",
           org.apache.spark.sql.types.LongType, nullable = false))))
     // the df-cut pin the pair join fans out from (both sides) — eager,
-    // so the raw explosion can be freed here; in strict mode the
+    // so nothing returned reads the raw explosion; in strict mode the
     // in-plan refusal fires during this materialization, before any
     // caller action
-    val gs = g.join(shared, "g").localCheckpoint()
-    releaseLocalCheckpoint(g)
+    val gs = Pins.pin(g.join(shared, "g"), eager = true)
     val inter = gs.as("a").join(gs.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))

@@ -89,7 +89,7 @@ object TokenizerOps {
     * pair (count desc, (l, r) asc) + merge application — the q195 loop
     * without the per-round inventory job, returning the merge TABLE
     * (the artifact a tokenizer ships). k one-row driver collects. */
-  def trainMerges(wf0: DataFrame, k: Int): Seq[(String, String)] = {
+  def trainMerges(wf0: DataFrame, k: Int): Seq[(String, String)] = Pins.scope {
     // pin the corpus reduction: each round's argmax is an ACTION, and
     // without the checkpoint every round re-ran the corpus scan +
     // word-count shuffle through the vocab lineage (k corpus passes
@@ -97,11 +97,9 @@ object TokenizerOps {
     // materialized vocabulary + r stacked replaces — the documented
     // "corpus touched exactly once" contract, now true per action too.
     // Boundedness: the pin is the word-frequency VOCABULARY (Heaps'-law
-    // bounded), never the corpus; its blocks are freed by
-    // ContextCleaner after the last round's action — the documented
-    // lazy-pin tradeoff
+    // bounded), never the corpus; the scope frees its blocks on return
     var vocab = wf0.select(spaced($"w").as("ws"), $"wf")
-      .localCheckpoint(false)
+      .transform(Pins.pin(_, eager = false))
     (1 to k).map { _ =>
       val top = pairCounts(vocab)
         .orderBy($"pair_count".desc, $"l_sym", $"r_sym")
@@ -139,7 +137,7 @@ object TokenizerOps {
     * merge-table budget, 10s of thousands in production), and each
     * round's plan is a scan of the cached word-freq table, never the
     * corpus. */
-  def q195BpeMerges(s: SparkSession, dir: String, k: Int = 4): DataFrame = {
+  def q195BpeMerges(s: SparkSession, dir: String, k: Int = 4): DataFrame = Pins.scope {
     val wf0 = wordFreq(s, dir)
     // pinned (lazy localCheckpoint): the per-round argmax and
     // symbol-inventory actions would otherwise each re-run the corpus
@@ -147,7 +145,7 @@ object TokenizerOps {
     // passes for k rounds; with the checkpoint the corpus is touched
     // exactly once and every round is vocabulary-sized
     var vocab = wf0.select(spaced($"w").as("ws"), $"wf")
-      .localCheckpoint(false)
+      .transform(Pins.pin(_, eager = false))
     // k vocabulary-sized rounds; the corpus shuffle above happened once
     val rows = (1 to k).map { round =>
       val top = pairCounts(vocab)

@@ -302,18 +302,20 @@ object VectorOps {
     * the embedding space. */
   def trainIvfCentroids(
       emb: DataFrame, k: Int, maxIter: Int = 25,
-      bestEffort: Boolean = false): DataFrame = {
+      bestEffort: Boolean = false): DataFrame = Pins.scope {
     // consumed every round: checkpoint once, scan k·N·dim per iteration
-    val embS = scaledRows(emb).localCheckpoint()
+    val embS = Pins.pin(scaledRows(emb), eager = true)
     var cents = embS.orderBy($"vec_id").limit(k)
       .select($"vec_id".as("cent_id"), $"e".as("cent"))
-      .localCheckpoint()
+      .transform(Pins.pin(_, eager = true))
     var prev = cents.collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
-      cents = lloydStep(embS, cents).localCheckpoint()
+      val next = Pins.pin(lloydStep(embS, cents), eager = true)
+      Pins.release(cents)
+      cents = next
       val cur = cents.collect()
         .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       converged = cur == prev
@@ -364,8 +366,8 @@ object VectorOps {
     * a 10⁹-vector index live in executor memory. */
   def pqTrainCodebooks(
       emb: DataFrame, m: Int, k: Int, dim: Int = 64,
-      maxIter: Int = 200, bestEffort: Boolean = false): DataFrame = {
-    val rows = subvectorRows(scaledRows(emb).localCheckpoint(), m, dim)
+      maxIter: Int = 200, bestEffort: Boolean = false): DataFrame = Pins.scope {
+    val rows = subvectorRows(Pins.pin(scaledRows(emb), eager = true), m, dim)
     // seed from the k LOWEST vec_ids (the trainIvfCentroids discipline —
     // a `vec_id < k` filter would silently under-seed, or return an
     // empty codebook, on non-zero-based id spaces)
@@ -373,14 +375,16 @@ object VectorOps {
       .orderBy($"vec_id").limit(k)
     var cents = rows.join(broadcast(seedIds), "vec_id")
       .select($"sub", $"vec_id".as("cent_id"), $"es".as("cent"))
-      .localCheckpoint()
+      .transform(Pins.pin(_, eager = true))
     var prev = cents.collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap
     require(prev.nonEmpty, "pqTrainCodebooks: no vectors to seed from")
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
-      cents = lloydStepKeyed(rows, cents).localCheckpoint()
+      val next = Pins.pin(lloydStepKeyed(rows, cents), eager = true)
+      Pins.release(cents)
+      cents = next
       val cur = cents.collect()
         .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap
       converged = cur == prev
@@ -731,7 +735,7 @@ object VectorOps {
     // the SHIPPED operators, not a parallel re-implementation: encode
     // once, then one pqSearch per probe — a regression anywhere in the
     // quantize/table/sum/rank path fails this gate
-    val codes = pqEncode(emb, c0, m).localCheckpoint()
+    val codes = Pins.pin(pqEncode(emb, c0, m), eager = true)
     val probes = emb.filter($"vec_id" < 3)
       .select($"vec_id", $"embedding").collect() // bounded: 3 rows
       .sortBy(_.getLong(0))
@@ -787,7 +791,7 @@ object VectorOps {
     val emb = load(s, dir, "embeddings")
     val c0 = subvectorRows(scaledRows(emb.filter($"vec_id" < 8)), m, 64)
       .select($"sub", $"vec_id".as("code_id"), $"es".as("cent"))
-    val codes = pqEncode(emb, c0, m).localCheckpoint()
+    val codes = Pins.pin(pqEncode(emb, c0, m), eager = true)
     val probes = emb.filter($"vec_id" < 3)
       .select($"vec_id", $"embedding").collect() // bounded: 3 rows
       .sortBy(_.getLong(0))
@@ -819,7 +823,7 @@ object VectorOps {
   def q138IvfPqRerank(s: SparkSession, dir: String): DataFrame = {
     val m = 4
     val emb = load(s, dir, "embeddings")
-    val embS = scaledRows(emb).localCheckpoint()
+    val embS = Pins.pin(scaledRows(emb), eager = true)
     val cents = embS.filter($"vec_id" < 8)
       .select($"vec_id".as("cent_id"), $"e".as("cent"))
     val intL1 = (a: Column, b: Column) => aggregate(
@@ -828,10 +832,10 @@ object VectorOps {
       .select($"vec_id", $"cent_id", intL1($"e", $"cent").as("d"))
       .groupBy($"vec_id")
       .agg(min_by($"cent_id", struct($"d", $"cent_id")).as("cent_id"))
-      .localCheckpoint()
+      .transform(Pins.pin(_, eager = true))
     val c0 = subvectorRows(embS.filter($"vec_id" < 8), m, 64)
       .select($"sub", $"vec_id".as("code_id"), $"es".as("cent"))
-    val codes = pqEncode(emb, c0, m).localCheckpoint()
+    val codes = Pins.pin(pqEncode(emb, c0, m), eager = true)
     val probes = emb.filter($"vec_id" < 3)
       .select($"vec_id", $"embedding").collect() // bounded: 3 rows
       .sortBy(_.getLong(0))

@@ -194,7 +194,7 @@ object WarehouseOps {
     // impossible while the returned frame still reads the pin lazily)
     val keyed = docs.select(HygieneOps.canonicalKey($"text").as("ck"),
       $"doc_id", $"lang", $"source")
-      .localCheckpoint(false)
+      .transform(Pins.pin(_, eager = false))
     val base = keyed.groupBy($"ck")
       .agg(min($"doc_id").as("rep_doc_id"), count(lit(1)).as("n_members"),
         count_distinct($"lang").as("n_langs"),
@@ -389,18 +389,19 @@ object WarehouseOps {
     // emptiness probe / partial aggregation) — pin lazily so the diff
     // is computed once per maintenance cycle, not once per consumer
     // (at 100 TB the diff pass dwarfs everything downstream of it)
-    val (insRaw, delRaw) = cdcDiff(v0, v1)
-    val ins = insRaw.localCheckpoint(false)
-    val del = delRaw.localCheckpoint(false)
-    val (nIns, nDel) = (ins.count(), del.count())
-    require(nIns > 0 && nDel > 0,
-      s"q287 gate is vacuous: the version diff must have both inserts " +
-        s"($nIns) and deletes ($nDel)")
-    SummaryRewrite.applyCdc(s, store, ins, del,
-      Seq("source"), Seq("n_chars"), minMaxCols = Seq("n_chars"))
-    // applyCdc's commit was the diffs' last consumer — free the blocks
-    TextOps.releaseLocalCheckpoint(ins)
-    TextOps.releaseLocalCheckpoint(del)
+    // applyCdc's commit is the diffs' last consumer — the scope frees
+    // the blocks right after it
+    Pins.scope {
+      val (insRaw, delRaw) = cdcDiff(v0, v1)
+      val ins = Pins.pin(insRaw, eager = false)
+      val del = Pins.pin(delRaw, eager = false)
+      val (nIns, nDel) = (ins.count(), del.count())
+      require(nIns > 0 && nDel > 0,
+        s"q287 gate is vacuous: the version diff must have both inserts " +
+          s"($nIns) and deletes ($nDel)")
+      SummaryRewrite.applyCdc(s, store, ins, del,
+        Seq("source"), Seq("n_chars"), minMaxCols = Seq("n_chars"))
+    }
     v1.write.mode("overwrite").parquet(factPath)
     SummaryRewrite.install(s)
     SummaryRewrite.register("q287_vdocs",

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, shiftright}
 
+import graft.operators.Pins
+
 /** Full cube construction — the analogue of `hisscube.py <in> <out>
   * create` (reference §3.1 builder list: metadata-cache → metadata →
   * data → link → visualization → ml-cube). In Spark the phases are five
@@ -26,19 +28,19 @@ object BuildCube {
   def build(
       spark: SparkSession,
       spectraDir: String, imagesDir: String, ccdConfigDir: String,
-      outDir: String): Summary = {
+      outDir: String): Summary = Pins.scope {
 
-    val spectra = Ingest.spectra(spark, spectraDir).cache()
-    val images = Ingest.images(spark, imagesDir, ccdConfigDir).cache()
+    val spectra = Pins.cache(Ingest.spectra(spark, spectraDir))
+    val images = Pins.cache(Ingest.images(spark, imagesDir, ccdConfigDir))
 
     Ingest.writeSorted(spectra, s"$outDir/spectra")
     Ingest.writeSorted(images, s"$outDir/images")
 
-    val links = Link.linkCutouts(spectra, images).cache()
+    val links = Pins.cache(Link.linkCutouts(spectra, images))
     links.toDF().write.mode(SaveMode.Overwrite)
       .partitionBy("zoom").parquet(s"$outDir/cutout_links")
 
-    val ml = MlCube.build(spectra, links, images).cache()
+    val ml = Pins.cache(MlCube.build(spectra, links, images))
     // (zoom, spatial-bucket) partitioning so the incremental update phase
     // (UpdateCube) can dynamic-overwrite only the buckets it re-stacks
     ml.toDF()
@@ -46,7 +48,7 @@ object BuildCube {
       .write.mode(SaveMode.Overwrite)
       .partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube")
 
-    val viz = VizCube.build(spectra, links, images).cache()
+    val viz = Pins.cache(VizCube.build(spectra, links, images))
     viz.toDF()
       .repartitionByRange(col("zoom"), col("heal_id"))
       .sortWithinPartitions("zoom", "heal_id")
@@ -55,11 +57,8 @@ object BuildCube {
 
     // counts from the cached datasets: an all-empty phase (e.g. zero
     // spatial overlap) writes a schemaless empty dir that can't be re-read
-    val summary = Summary(
+    Summary(
       spectra.count(), images.count(), links.count(), ml.count(), viz.count())
-    Seq(spectra, images, links).foreach(_.unpersist())
-    ml.unpersist(); viz.unpersist()
-    summary
   }
 
   /** V3 read path: one zoom level of the dense visualization cube —

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pins
+
 /** Incremental update — the analogue of `hisscube.py update`
   * (`hisscube.py:18-80`, `builders_parallel.py`): bring NEW spectra into
   * an existing cube without a from-scratch rebuild. Where the reference
@@ -40,7 +42,15 @@ object UpdateCube {
     * ([[graft.streaming.ObservationStream.updateStream]]). */
   def updateWith(
       spark: SparkSession, outDir: String,
-      newSpecsIn: Dataset[SpectrumObs]): UpdateSummary = {
+      newSpecsIn: Dataset[SpectrumObs]): UpdateSummary = Pins.scope {
+    val incoming = Pins.cache(newSpecsIn)
+    if (incoming.isEmpty) UpdateSummary(0, 0, 0, 0, 0)
+    else updateNonEmpty(spark, outDir, incoming)
+  }
+
+  private def updateNonEmpty(
+      spark: SparkSession, outDir: String,
+      incoming: Dataset[SpectrumObs]): UpdateSummary = {
     import spark.implicits._
 
     // CONVERGENT RETRY DESIGN: the multi-step sequence (append spectra →
@@ -54,11 +64,6 @@ object UpdateCube {
     // would vanish from the batch and the unfinished ML/viz steps would
     // be skipped forever.) Every probe is a pruned single-column read of
     // the zoom=0 partition.
-    val incoming = newSpecsIn.cache()
-    if (incoming.isEmpty) {
-      incoming.unpersist()
-      return UpdateSummary(0, 0, 0, 0, 0)
-    }
     val images = spark.read.parquet(s"$outDir/images").as[ImageObs]
 
     // 1. spectra: append only observations not already present
@@ -66,7 +71,7 @@ object UpdateCube {
       .where(col("zoom") === 0).select(col("spec_id")).distinct()
     val newSpecs = incoming.toDF()
       .join(existingSpecIds, Seq("spec_id"), "left_anti")
-      .as[SpectrumObs].cache()
+      .as[SpectrumObs].transform(Pins.cache)
     val nNewSpectra = newSpecs.count()
     if (nNewSpectra > 0)
       newSpecs.toDF().write.mode(SaveMode.Append)
@@ -79,7 +84,7 @@ object UpdateCube {
     val unlinked = incoming.toDF()
       .join(linkedIds, Seq("spec_id"), "left_anti")
       .as[SpectrumObs]
-    val newLinks = Link.linkCutouts(unlinked, images).cache()
+    val newLinks = Pins.cache(Link.linkCutouts(unlinked, images))
     val nNewLinks = newLinks.count()
     if (nNewLinks > 0)
       newLinks.toDF().write.mode(SaveMode.Append)
@@ -101,7 +106,7 @@ object UpdateCube {
     val affected = expected
       .join(stored, col("affected_healpix") === col("target_healpix"), "left")
       .filter(col("n_spectra").isNull || col("n_spectra") =!= col("expected_n"))
-      .select(col("affected_healpix")).cache()
+      .select(col("affected_healpix")).transform(Pins.cache)
     val nAffected = affected.count()
 
     // 4.+5. re-stack stale targets from the UPDATED tables and rewrite
@@ -134,10 +139,10 @@ object UpdateCube {
       // localCheckpoint — the write job's plan becomes a scan of already-
       // materialized blocks with its file lineage cut. (cache() was not a
       // barrier: an evicted block would recompute mid-write and re-read
-      // files the overwrite is deleting.)
+      // files the overwrite is deleting.) The scope frees it on return.
       val mlRewrite = oldMl.unionByName(
         mlNew.toDF().withColumn("bucket", shiftright(col("target_healpix"), BucketShift)))
-        .localCheckpoint()
+        .transform(Pins.pin(_, eager = true))
       require(!mlRewrite.queryExecution.executedPlan.toString.contains("ml_cube"),
         "ml_cube rewrite plan must not read the path being overwritten")
       mlRowCount = mlRewrite.count()
@@ -160,7 +165,7 @@ object UpdateCube {
       .where(col("zoom") === 0).select(col("fits_name").as("viz_name")).distinct()
     val vizSpecs = incoming.toDF()
       .join(vizNames, col("fits_name") === col("viz_name"), "left_anti")
-      .as[SpectrumObs].cache()
+      .as[SpectrumObs].transform(Pins.cache)
     val vizSpecIds = vizSpecs.toDF().where(col("zoom") === 0)
       .select(col("spec_id").as("v_spec_id")).distinct()
     val vizLinks = spark.read.parquet(s"$outDir/cutout_links")
@@ -169,20 +174,16 @@ object UpdateCube {
       .as[CutoutLink]
     var vizCount = 0L
     if (!vizSpecs.isEmpty) {
-      val vizNew = VizCube.build(vizSpecs, vizLinks, images).cache()
+      val vizNew = Pins.cache(VizCube.build(vizSpecs, vizLinks, images))
       vizCount = vizNew.count()
       vizNew.toDF()
         .repartitionByRange(col("zoom"), col("heal_id"))
         .sortWithinPartitions("zoom", "heal_id")
         .write.mode(SaveMode.Append)
         .partitionBy("zoom").parquet(s"$outDir/viz_cube")
-      vizNew.unpersist()
     }
 
-    val summary = UpdateSummary(nNewSpectra, nNewLinks, nAffected, mlRowCount, vizCount)
-    incoming.unpersist(); newSpecs.unpersist(); newLinks.unpersist()
-    affected.unpersist(); vizSpecs.unpersist()
-    summary
+    UpdateSummary(nNewSpectra, nNewLinks, nAffected, mlRowCount, vizCount)
   }
 
   /** CLI parity with `hisscube.py <in> <out> update`:

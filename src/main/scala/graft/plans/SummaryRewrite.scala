@@ -1533,15 +1533,13 @@ object SummaryRewrite {
     // phantom count materializes the blocks, the sweep and the write
     // read them. Checkpoint, not persist — the commit's writeSnapshot
     // recacheByPath can never invalidate-and-recompute a truncated
-    // lineage, and the pinned frame is summary-group-sized.
+    // lineage, and the pinned frame is summary-group-sized. The scope
+    // frees it after the commit and on the refusal paths (the
+    // phantom-delete and negative-evidence requires below), so repeated
+    // refused commits on a long-lived session never pile up block sets.
+    graft.operators.Pins.scope {
     val joined = merged.join(delDelta, keys, "full_outer")
-      .localCheckpoint(false)
-    // try/finally so REFUSAL paths (the phantom-delete and
-    // negative-evidence requires below) also free the pinned blocks
-    // deterministically — on a long-lived session repeated refused
-    // commits would otherwise accumulate MEMORY_AND_DISK block sets
-    // until driver GC happens to run
-    try {
+      .transform(graft.operators.Pins.pin(_, eager = false))
     // a delete for a key group the artifact does not carry is a wrong
     // batch, not a no-op
     val phantom = joined.filter(col("cnt").isNull).count()
@@ -1625,9 +1623,7 @@ object SummaryRewrite {
     graft.operators.IndexOps.writeSnapshot(
       layout(result.select(base.schema.fieldNames.map(col)
         .toIndexedSeq: _*), keys), store)
-    // the commit (or a refusal above) was the last consumer of the
-    // pinned join — the finally frees its blocks on every path
-    } finally graft.operators.TextOps.releaseLocalCheckpoint(joined)
+    }
   }
 
   /** Persist a derived summary frame ([[rollupSummary]]'s output, or
@@ -5132,10 +5128,6 @@ object SummaryRewrite {
       * the proven single-level plan, never guesses. */
     private def splitHistDistinct(agg: Aggregate, posA: Attribute,
         kA: Attribute, vA: Attribute): Aggregate = {
-      // A/B toggle for benchmarking/plan capture (the round-9 PROF_AQE
-      // precedent): set to serve the single-level plan this split
-      // replaces. Correctness is identical either way.
-      if (sys.env.contains("GRAFT_DISABLE_HIST_SPLIT")) return agg
       val distinctOverK = (ae: AggregateExpression) =>
         ae.isDistinct && ae.filter.isEmpty &&
           (ae.aggregateFunction match {

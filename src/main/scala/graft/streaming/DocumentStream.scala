@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.operators.Pins
+
 /** Streaming document ingest with exact dedup-at-ingest — the streaming
   * face of the batch curation surface: as document batches arrive, drop
   * every document whose content hash has been seen before, so the
@@ -246,7 +248,7 @@ object DocumentStream {
       maxCandidates: Int = graft.operators.TextOps.MaxCandidatesPerDoc,
       allowLossy: Boolean = false,
       warnAtOccupancy: Option[Double] = None,
-      onWarn: String => Unit = msg => System.err.println(msg)): DataFrame = {
+      onWarn: String => Unit = msg => System.err.println(msg)): DataFrame = Pins.scope {
     import graft.operators.TextOps
     require(warnAtOccupancy.forall(f => f > 0 && f <= 1),
       s"warnAtOccupancy must be in (0, 1], got $warnAtOccupancy")
@@ -290,7 +292,7 @@ object DocumentStream {
     // it was meant to replace) the checkpoint stores raw row blocks and
     // TRUNCATES lineage, so the store writes' recacheByPath can never
     // invalidate-and-recompute it.
-    val newSigs = TextOps.signatureFrame(batch).localCheckpoint(false)
+    val newSigs = Pins.pin(TextOps.signatureFrame(batch), eager = false)
     // narrow projection over the cached signatures — consumers
     // recompute it for free
     val newBands = bucketedBands(newSigs)
@@ -307,7 +309,7 @@ object DocumentStream {
     // lookup — lazily checkpointed so the store is scanned once per
     // batch (materialized by the pdoc collect below, no eager job)
     val storeBands = prunedStoreBands(store, buckets)
-      .map(_.localCheckpoint(false))
+      .map(Pins.pin(_, eager = false))
     val slim = (d: DataFrame) => d.select(col("doc_id"), col("band"), col("bkey"))
     val probe = storeBands match {
       case Some(sb) => slim(sb).unionByName(slim(newBands))
@@ -317,7 +319,7 @@ object DocumentStream {
     // whichever action runs first materializes the blocks); strict mode
     // has a single consumer, so it stays lazy
     val rnRaw = TextOps.bandCandidates(probe, slim(newBands))
-    val rnFrame = if (allowLossy) rnRaw.localCheckpoint(false) else rnRaw
+    val rnFrame = if (allowLossy) Pins.pin(rnRaw, eager = false) else rnRaw
     val (kept, nCapped) = TextOps.guardCandidates(rnFrame, maxCandidates, allowLossy)
     // with a store present, cand feeds BOTH the verify and the
     // candidate-id pruning — pin once; the pdoc collect below then
@@ -325,13 +327,13 @@ object DocumentStream {
     // case has a single consumer (verify), which itself materializes
     // before the writes, so it stays lazy.
     val cand =
-      if (storeBands.isDefined) kept.localCheckpoint(false) else kept
+      if (storeBands.isDefined) Pins.pin(kept, eager = false) else kept
     // verify + rep lookup touch the store only through the candidate ids
     val candIds = cand
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
     val storeMeta = storeBands.map { sb =>
       sb.select(col("doc_id"), col("rep"), col("pdoc")).distinct()
-        .join(candIds, "doc_id").localCheckpoint(false)
+        .join(candIds, "doc_id").transform(Pins.pin(_, eager = false))
     }
     // bounded collect: ≤ SigBuckets distinct pdoc partitions — ONE job
     // that materializes the pruned store scan and the guarded
@@ -350,8 +352,13 @@ object DocumentStream {
         .collect().map(_.getInt(0)).toSeq
     val shCols = (d: DataFrame) => d.select(col("doc_id"), col("sh_set"))
     val verifySigs =
-      if (pdocs.isEmpty) shCols(newSigs)
-      else {
+      if (pdocs.isEmpty) {
+        // the early read has no consumer on this path; still say when
+        // it failed (a missing or corrupt sigs side of the store)
+        sigsReadF.foreach(_.foreach(_.failed.foreach(t => System.err.println(
+          s"WARN nearDupDedupBatch: background read of $sigStore/sigs failed: $t"))))
+        shCols(newSigs)
+      } else {
         // pdocs nonEmpty ⇒ a store exists ⇒ the background read was
         // launched; a sigs-side read failure surfaces here — exactly
         // where the inline read used to throw
@@ -389,7 +396,8 @@ object DocumentStream {
     // (doc_id, final_rep) for candidate docs only.
     val assign = r0.join(reps, "cluster_id")
       .select(col("doc_id"), col("final_rep"))
-      .localCheckpoint(false) // consumed by dupIds AND both store writes
+      // consumed by dupIds AND both store writes
+      .transform(Pins.pin(_, eager = false))
     val dupIds = assign.filter(col("doc_id") =!= col("final_rep"))
       .select(col("doc_id"))
     val survivors = batch.join(dupIds, Seq("doc_id"), "left_anti")
@@ -475,19 +483,9 @@ object DocumentStream {
     // the awaited writes were the LAST consumers of every pinned frame
     // except `assign` (the returned lazy survivors frame reads it — it
     // is (doc_id, final_rep) for candidate docs only, the one bounded
-    // block set a caller's action still needs). Each frame below is a
-    // checkpoint-truncated single-leaf plan, so the release frees
-    // exactly its own blocks; without it a long-lived streaming session
-    // accumulates five dead block sets per micro-batch until driver GC.
-    // Release only frames this invocation actually checkpointed (the
-    // strict-mode rnFrame / first-batch cand aliases are raw plans
-    // whose traversal would free UPSTREAM checkpoints still in use).
-    // Error paths skip the release and fall back to ContextCleaner GC.
-    TextOps.releaseLocalCheckpoint(newSigs)
-    storeBands.foreach(TextOps.releaseLocalCheckpoint)
-    if (allowLossy) TextOps.releaseLocalCheckpoint(rnFrame)
-    if (storeBands.isDefined) TextOps.releaseLocalCheckpoint(cand)
-    storeMeta.foreach(TextOps.releaseLocalCheckpoint)
+    // block set a caller's action still needs), so the scope frees the
+    // others on return; a long-lived streaming session would otherwise
+    // accumulate five dead block sets per micro-batch until driver GC
     survivors
   }
 

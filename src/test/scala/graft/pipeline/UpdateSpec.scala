@@ -48,6 +48,32 @@ class UpdateSpec extends AnyFunSuite {
     (dir, specInit, specNew)
   }
 
+  /** Synthetic CCD gain and dark-variance tables (camcol 1-6 × ugriz),
+    * so a case that checks no reference value runs without the
+    * reference configuration. */
+  def writeCcdConfig(dir: Path): String = {
+    val cfg = dir.resolve("ccd"); Files.createDirectories(cfg)
+    def table(f: (Int, Int) => Double) =
+      ("camcol\trun\tu\tg\tr\ti\tz" +: (1 to 6).map { c =>
+        (Seq(c.toString, ">0") ++ (0 until 5).map(b => "%.3f".format(f(c, b)))).mkString("\t")
+      }).mkString("", "\n", "\n")
+    Files.write(cfg.resolve("ccd_gain.tsv"), table((c, b) => 3.9 + 0.1 * c + 0.05 * b).getBytes("UTF-8"))
+    Files.write(cfg.resolve("ccd_dark_variance.tsv"), table((c, b) => 0.8 + 0.2 * c + 0.1 * b).getBytes("UTF-8"))
+    cfg.toString
+  }
+
+  test("update frees every pin and cache it made, the ML rewrite barrier included") {
+    val (dir, specInit, specNew) = writeFixtures()
+    val out = dir.resolve("cube_pins").toString
+    BuildCube.build(spark, specInit.toString, dir.resolve("images").toString,
+      writeCcdConfig(dir), out)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val s = UpdateCube.update(spark, out, specNew.toString)
+    assert(s.affectedTargets == 1 && s.mlRowsRewritten > 0, s.toString)
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"still persisted after update: $left")
+  }
+
   test("update(one new spectrum) equals a from-scratch rebuild on every table") {
     import spark.implicits._
     val (dir, specInit, specNew) = writeFixtures()
